@@ -28,6 +28,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cloud_ocr_summarizer_spark import lineage
 from cloud_ocr_summarizer_spark.datagen import (
     derive_html_from_documents,
     derive_spans_from_documents,
@@ -160,39 +161,12 @@ def extract_web_documents_classified_fused(docs: DataFrame) -> DataFrame:
 
 
 def web_partition_metrics(
-    web: DataFrame, *, run_id: str, snapshot_id: int = 0
+    spark: SparkSession, parts: dict[int, tuple], *, run_id: str, snapshot_id: int
 ) -> DataFrame:
-    """LINEAGE_SCHEMA-compatible rows for the composed output.
-
-    Same contract as ``lineage.partition_metrics`` (one row per
-    partition: run, snapshot, doc/span counts, bytes), computed over the
-    composed schema — span_count from the span branch, bytes from the
-    stripped main text.  wall_time_s is null on this cheap path, exactly
-    as on the flagship's.
-    """
-    return (
-        web.select(
-            F.spark_partition_id().alias("partition_id"),
-            F.col("n_spans").cast("long").alias("n_spans"),
-            F.coalesce(F.octet_length("main_text"), F.lit(0))
-            .cast("long")
-            .alias("n_bytes"),
-        )
-        .groupBy("partition_id")
-        .agg(
-            F.count("*").alias("doc_count"),
-            F.sum("n_spans").cast("long").alias("span_count"),
-            F.sum("n_bytes").cast("long").alias("bytes"),
-        )
-        .select(
-            F.lit(run_id).alias("run_id"),
-            F.lit(snapshot_id).cast("long").alias("snapshot_id"),
-            "partition_id",
-            "doc_count",
-            "span_count",
-            "bytes",
-            F.lit(None).cast("double").alias("wall_time_s"),
-        )
+    """Lineage rows of a ``run_web`` counting job: the flagship's rows and
+    timing, over the composed output's span counts and main-text bytes."""
+    return lineage.timed_partition_metrics(
+        spark, parts, run_id=run_id, snapshot_id=snapshot_id
     )
 
 
@@ -216,8 +190,8 @@ def run_web(
     ``pipeline`` swaps the per-batch plan (default: the zero-shuffle
     fused twin; pass ``extract_web_documents_classified`` to run the
     full-Readability-classifier variant under the same resume/lineage
-    contract — any (docs)->DataFrame with doc_id/main_text/n_spans
-    columns works).  Returns a ``FlagshipResult``.
+    contract — any (docs)->DataFrame with doc_id/main_text columns
+    works; lineage counts its n_spans, if any).  Returns a ``FlagshipResult``.
     """
     from cloud_ocr_summarizer_spark.operators.skew import salted_repartition
     from cloud_ocr_summarizer_spark.plans.flagship import FlagshipResult
@@ -237,7 +211,13 @@ def run_web(
     make_web = pipeline if pipeline is not None else extract_web_documents_fused
     web = make_web(todo).persist()
     try:
-        n = web.count()
+        n_spans = F.col("n_spans") if "n_spans" in web.columns else F.lit(0)
+        parts = lineage.count_partitions(
+            lineage.partition_counts(
+                web, n_spans=n_spans, n_bytes=F.octet_length("main_text")
+            )
+        )
+        n = sum(v[0] for v in parts.values())
         if n == 0:
             return FlagshipResult(run_id=run_id, snapshot_id=None, docs_written=0)
         snapshot_id = sink.append(web, run_id=run_id)
@@ -248,7 +228,9 @@ def run_web(
                 else SnapshotSink(lineage_root)
             )
             lsink.append(
-                web_partition_metrics(web, run_id=run_id, snapshot_id=snapshot_id),
+                web_partition_metrics(
+                    spark, parts, run_id=run_id, snapshot_id=snapshot_id
+                ),
                 run_id=run_id,
             )
         return FlagshipResult(run_id=run_id, snapshot_id=snapshot_id, docs_written=n)

@@ -7,9 +7,10 @@ Physical shape (SURVEY.md §4.4):
     -> size gate                        [10 MB analogue]
     -> [salted repartition]             [only before batch-UDF stages]
     -> extract_spans (row-local)        [0 shuffles]
-    -> [classify detailed via rows]     [Arrow batches]
+    -> persist + count per partition    [one JVM job; wall_time_s = run
+                                         time of the task that computed it]
     -> sink.append(extracted)           [snapshot commit]
-    -> sink.append(lineage)             [metrics table]
+    -> sink.append(lineage)             [metrics table, built on driver]
 
 Run it twice and the second run writes nothing new (idempotent resume).
 """
@@ -21,7 +22,11 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
-from cloud_ocr_summarizer_spark.lineage import timed_partition_metrics
+from cloud_ocr_summarizer_spark.lineage import (
+    count_partitions,
+    partition_metrics,
+    timed_partition_metrics,
+)
 from cloud_ocr_summarizer_spark.operators.extract import extract_spans
 from cloud_ocr_summarizer_spark.operators.skew import salted_repartition
 from cloud_ocr_summarizer_spark.sources.checkpoint import SnapshotSink, pending_docs
@@ -66,12 +71,11 @@ def run_flagship(
     todo = pending_docs(input_df, sink, spark)
     if repartition_to:
         todo = salted_repartition(todo, repartition_to)
-    extracted = extract_spans(todo, min_confidence=min_confidence)
-
-    # Spark DataFrames recompute per action; persist so the count, the
-    # output write and the lineage pass share one execution.
-    extracted = extracted.persist()
-    docs = extracted.count()
+    # persisted: the counting job (its tasks time lineage), the output
+    # write and the raw-debug join share one execution
+    extracted = extract_spans(todo, min_confidence=min_confidence).persist()
+    parts = count_partitions(partition_metrics(extracted, run_id=run_id))
+    docs = sum(v[0] for v in parts.values())
     if docs == 0:
         extracted.unpersist()
         return FlagshipResult(run_id=run_id, snapshot_id=None, docs_written=0)
@@ -94,7 +98,7 @@ def run_flagship(
         rsink.append(raw, run_id=run_id)
     if lineage_root or lineage_sink is not None:
         metrics = timed_partition_metrics(
-            extracted, run_id=run_id, snapshot_id=snapshot_id
+            spark, parts, run_id=run_id, snapshot_id=snapshot_id
         )
         lsink = lineage_sink if lineage_sink is not None else SnapshotSink(
             lineage_root

@@ -2279,7 +2279,10 @@ ORACLES["html_main_dense_simple"] = _DENSE
 # Composed web-extraction pipeline (plans/extract_web.py): DOM strip +
 # span stats + layout parse joined per document.  Reuses the exact CTEs
 # of the single-operator oracles so the composition cannot diverge from
-# the pieces it is built from.
+# the pieces it is built from.  A document without words has main_text ""
+# in the program; DuckDB's array_to_string of an empty list is NULL, so
+# the final SELECT coalesces (``_HTML_MAIN`` itself stays as is: it also
+# checks html_main_content*).
 ORACLES["extract_web"] = _LAYOUT_BLOCKS_CTES + r"""
 , __span_stats AS (
   SELECT doc_id,
@@ -2297,7 +2300,7 @@ ORACLES["extract_web"] = _LAYOUT_BLOCKS_CTES + r"""
         FROM __blocks)
   GROUP BY doc_id
 ), __dom AS (""" + _HTML_MAIN + r""")
-SELECT d.doc_id, d.main_text, d.n_tokens,
+SELECT d.doc_id, coalesce(d.main_text, '') AS main_text, d.n_tokens,
        CAST(coalesce(s.n_spans, 0) AS INT) AS n_spans,
        CAST(coalesce(s.n_media, 0) AS INT) AS n_media,
        CAST(coalesce(b.n_blocks, 0) AS INT) AS n_blocks,

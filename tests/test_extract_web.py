@@ -69,10 +69,8 @@ def test_empty_document_survives_both_variants(spark):
         extract_web_documents_fused,
     )
 
-    docs = spark.createDataFrame(
-        [(1, "", "s0"), (2, "   ", "s0"), (3, "some real words here", "s1")],
-        "doc_id long, text string, source string",
-    )
+    rows = [(1, "", "s0"), (2, "   ", "s0"), (3, "some real words here", "s1")]
+    docs = spark.createDataFrame(rows, "doc_id long, text string, source string")
     for fn in (extract_web_documents, extract_web_documents_fused):
         got = {r["doc_id"]: r for r in fn(docs).collect()}
         assert set(got) == {1, 2, 3}, fn.__name__
@@ -81,6 +79,20 @@ def test_empty_document_survives_both_variants(spark):
             assert (r["n_spans"], r["n_media"], r["n_blocks"]) == (0, 0, 0)
             assert r["first_block"] is None and r["main_text"] == ""
         assert got[3]["n_blocks"] > 0 and got[3]["first_block"] is not None
+
+    # the DuckDB oracle agrees on the same three documents
+    import duckdb
+
+    from cloud_ocr_summarizer_spark.plans.compare import compare_query
+    from cloud_ocr_summarizer_spark.plans.oracles import ORACLES
+
+    con = duckdb.connect()
+    con.sql("CREATE TABLE documents (doc_id BIGINT, text VARCHAR, source VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?, ?)", rows)
+    res = compare_query(
+        extract_web_documents_fused(docs), con, ORACLES["extract_web_fused"]
+    )
+    assert res["values_match"] and not res["kind_mismatches"], res
 
 
 def test_run_web_idempotent_resume(spark, tmp_path):

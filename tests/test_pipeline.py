@@ -73,6 +73,79 @@ def test_lineage_covers_all_docs_and_spans(spark, tmp_path):
     assert sum(r["bytes"] for r in rows) > 0
 
 
+def test_lineage_has_a_row_per_partition_including_empty(spark, tmp_path):
+    """128 partitions over 80 docs leave most partitions empty; each still
+    gets a lineage row (zero counts, timed), and the totals still cover
+    the committed output."""
+    out, lin = str(tmp_path / "out"), str(tmp_path / "lin")
+    docs = interleaved_docs(spark, 80, seed=42)
+    run_flagship(spark, docs, output_root=out, lineage_root=lin, repartition_to=128)
+
+    rows = SnapshotSink(lin).read_committed(spark).collect()
+    assert sorted(r["partition_id"] for r in rows) == list(range(128))
+    empty = [r for r in rows if r["doc_count"] == 0]
+    assert empty and all(r["span_count"] == 0 and r["bytes"] == 0 for r in empty)
+    assert all(r["wall_time_s"] is not None and r["wall_time_s"] >= 0 for r in rows)
+    committed = SnapshotSink(out).read_committed(spark)
+    assert sum(r["doc_count"] for r in rows) == 80
+    assert sum(r["span_count"] for r in rows) == committed.select(
+        F.sum(F.size("spans_out"))
+    ).first()[0]
+
+
+def _scala_seq(seq) -> list:
+    return [seq.apply(i) for i in range(seq.size())]
+
+
+def test_lineage_times_the_extraction_stage_without_python(spark, tmp_path):
+    """wall_time_s is the executor run time of the tasks that computed the
+    extraction: summed, it matches that stage's executorRunTime as the
+    status store reports it.  run_flagship runs no Python operator, and
+    leaves the caller's job group in force."""
+    sc = spark.sparkContext
+    group = f"caller-{tmp_path.name}"
+    docs = interleaved_docs(spark, 2000, seed=5)
+    sc.setJobGroup(group, group)
+    try:
+        run_flagship(
+            spark, docs, output_root=str(tmp_path / "out"),
+            lineage_root=str(tmp_path / "lin"),
+        )
+        assert sc.getLocalProperty("spark.jobGroup.id") == group
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    store = jsc.statusStore()
+    # the run's first job computes the extraction (the input is a
+    # spark.range plan, the sink is empty): its first stage that ran
+    first_job = min(sc.statusTracker().getJobIdsForGroup(group))
+    empty = sc._gateway.new_array(sc._jvm.double, 0)
+    stages = [
+        a
+        for sid in sorted(_scala_seq(store.job(first_job).stageIds()))
+        for a in _scala_seq(store.stageData(sid, False, None, False, empty))
+        if a.status().toString() == "COMPLETE"
+    ]
+    stage_s = stages[0].executorRunTime() / 1e3
+    lineage = SnapshotSink(str(tmp_path / "lin")).read_committed(spark)
+    wall_s = lineage.agg(F.sum("wall_time_s")).first()[0]
+    assert stage_s > 0
+    assert abs(wall_s - stage_s) <= 0.1 * stage_s, (wall_s, stage_s)
+
+    sql = spark._jsparkSession.sharedState().statusStore()
+    plans = [
+        ex.physicalPlanDescription()
+        for ex in _scala_seq(sql.executionsList())
+        if ex.description() == group
+    ]
+    assert plans
+    for op in ("MapInPandas", "MapInArrow", "ArrowEvalPython", "BatchEvalPython"):
+        assert not any(op in p for p in plans), op
+
+
 def test_split_heavy_docs_round_trip(spark):
     docs = interleaved_docs(spark, 20, seed=7).filter(F.size("spans") > 0)
     chunked = split_heavy_docs(docs, max_spans_per_chunk=3)
@@ -367,3 +440,39 @@ def test_run_crawl_plan_job_end_to_end(spark, tmp_path):
     assert roll.agg(F.sum("n_dropped_chains")).first()[0] > 0
     audit = spark.read.parquet(f"{out}/ledger_audit").first()
     assert audit.n_multi_src == 0 and audit.n_src_urls > 0
+
+
+def test_run_extract_job_end_to_end(spark, tmp_path):
+    """jobs/run_extract.py: the spark-submit extraction entry runs in a
+    child process (its own vanilla session), commits every doc with
+    lineage that covers and times them, and a rerun writes nothing."""
+    import subprocess
+    import sys as _sys
+    from pathlib import Path
+
+    inp, out, lin = (str(tmp_path / d) for d in ("in", "out", "lin"))
+    interleaved_docs(spark, 300, seed=9).write.parquet(inp)
+    job = Path(__file__).parent.parent / "jobs" / "run_extract.py"
+
+    def run() -> str:
+        proc = subprocess.run(
+            [_sys.executable, str(job), "--input", inp, "--output", out,
+             "--lineage", lin],
+            capture_output=True, text=True, timeout=420,
+        )
+        assert proc.returncode == 0, proc.stderr[-3000:]
+        return proc.stdout
+
+    assert "docs_written=300" in run()
+    committed = SnapshotSink(out).read_committed(spark)
+    lineage = SnapshotSink(lin).read_committed(spark)
+    got = lineage.agg(
+        F.sum("doc_count").alias("docs"),
+        F.sum("span_count").alias("spans"),
+        F.sum("wall_time_s").alias("wall"),
+    ).first()
+    assert got["docs"] == committed.count() == 300
+    assert got["spans"] == committed.select(F.sum(F.size("spans_out"))).first()[0]
+    assert got["wall"] > 0
+
+    assert "docs_written=0" in run()
